@@ -225,18 +225,21 @@ object Graft {
       sort: Seq[Column]): DataFrame =
     graft.util.DistRank.globalNtile(df, as, buckets, sort)
 
-  /** PageRank over an edge list with columns (src, dst). The edge
-    * table is checkpointed once with out-degree attached; each
-    * iteration broadcasts the node-sized rank table into a
-    * map-side-combined contribution aggregate (no recurring edge
-    * shuffle). Ranks are rounded to 12 dp per iteration so reruns are
-    * bit-stable. Pass a DISTINCT edge list for standard PageRank —
-    * duplicate (src, dst) rows act as edge weights (each repeat
-    * contributes a share). Sink nodes keep their base rank; their
-    * mass is not redistributed. Returns (node, r). */
+  /** PageRank over an edge list with columns (src, dst): the
+    * personalized-PageRank core (`graph_pagerank_personalized`'s loop)
+    * with every node a seed, i.e. uniform teleport. The edge table is
+    * checkpointed once with out-degree attached; each iteration
+    * broadcasts the node-sized rank table into a map-side-combined
+    * contribution aggregate (no recurring edge shuffle) while the
+    * node count fits the size gate, and plans node-keyed shuffle
+    * joins past it. Ranks are rounded to 12 dp per iteration so
+    * reruns are bit-stable. Pass a DISTINCT edge list for standard
+    * PageRank — duplicate (src, dst) rows act as edge weights (each
+    * repeat contributes a share). Sink nodes keep their base rank;
+    * their mass is not redistributed. Returns (node, r). */
   def pageRank(edges: DataFrame, iterations: Int = 5,
       damping: Double = 0.85): DataFrame =
-    graft.ops.Composite4.pageRankOn(edges, iterations, damping)
+    graft.ops.GraphRounds.pageRank(edges, _ => lit(true), iterations, damping)
 
   /** Per-dimension z-score standardization of a vector column:
     * posexplode → per-dimension moments (broadcast back) →
@@ -328,12 +331,15 @@ object Graft {
   /** Multi-source hop-bounded BFS distance histogram over a
     * directed-symmetric (src, dst) edge list: `seed` marks the
     * distance-0 nodes, `maxHops` synchronized Bellman-Ford rounds
-    * relax, unreached nodes bucket at -1. One broadcast-joined
-    * node-keyed min exchange per round (the connectedComponents
-    * discipline). */
+    * relax at unit weight, unreached nodes bucket at -1. This is the
+    * (min, +) relaxation core that `graph_connected_components` and
+    * `graph_shortest_path(_weighted)` share: one broadcast-joined
+    * node-keyed min exchange per round under the node-count size
+    * gate. Returns (distance, n_nodes). */
   def shortestPathHistogram(edges: DataFrame, seed: Column => Column,
       maxHops: Int): DataFrame =
-    graft.ops.Composite31.shortestPathOn(edges, seed, maxHops)
+    graft.ops.GraphRounds.distanceHistogram(
+      edges.withColumn("w", lit(1L)), seed, maxHops)
 
   /** 1- and 2-hop ego-network sizes (seed excluded) for the nodes
     * `seed` selects, over a directed-symmetric (src, dst) edge list.
@@ -343,14 +349,16 @@ object Graft {
     graft.ops.Composite32.egoSize2HopOn(edges, seed)
 
   /** Weighted multi-source shortest-path distance histogram over a
-    * directed-symmetric (src, dst, w) edge list: `maxHops`
-    * synchronized Bellman-Ford rounds relax min(d + w); unreached
-    * nodes bucket at -1. Note maxHops bounds the HOP count, not the
-    * accumulated weight. Same broadcast-loop discipline as
-    * [[shortestPathHistogram]]. */
+    * (src, dst, w) edge list with NON-NEGATIVE weights: `maxHops`
+    * synchronized Bellman-Ford rounds relax min(d + w) along edge
+    * direction; unreached nodes bucket at -1. The node universe is
+    * src ∪ dst, so a directed list keeps its sink-only nodes. Note
+    * maxHops bounds the HOP count, not the accumulated weight. The
+    * same relaxation core as [[shortestPathHistogram]]. Returns
+    * (distance, n_nodes). */
   def shortestPathWeightedHistogram(edges: DataFrame, seed: Column => Column,
       maxHops: Int): DataFrame =
-    graft.ops.Composite33.shortestPathWeightedOn(edges, seed, maxHops)
+    graft.ops.GraphRounds.distanceHistogram(edges, seed, maxHops)
 
   /** Orphan-FK audit: one (edge, n_child, n_orphans) row per
     * (name, child, fkCol, parent, pkCol) tuple. NULL fks count as

@@ -11,8 +11,8 @@ import graft.util.Tables._
   * discrete percentiles, and neighborhood similarity.
   *
   * Scale shapes: connected components runs 6 synchronized min-label
-  * rounds over the bounded co-purchase edge list (pagerank's
-  * localCheckpoint discipline — each round broadcasts the node-sized
+  * rounds over the bounded co-purchase edge list ([[GraphRounds.relax]]
+  * at weight 0 — each round broadcasts the node-sized
   * label table into the edge scan and pays ONE node-keyed exchange,
   * never an unbounded lineage);
   * concurrency is a sweep-line over ±1 boundary events (per-type
@@ -43,72 +43,17 @@ object Composite20 {
   // Surfaces the component-label histogram after round 6 — identical
   // to the oracle's 6 unrolled CTE rounds whether or not the graph
   // has converged (fixed-iteration semantics, pagerank discipline).
-  private def connectedComponents(s: SparkSession, dir: String): DataFrame = {
-    // r19: self-loops are appended to the checkpointed edge table, so
-    // a round's neighbourhood-min over CLOSED neighbourhoods is ONE
-    // join + one map-side-combining aggregate — the second per-round
-    // broadcast join (re-attaching the node's own label) is gone, and
-    // with it one broadcast-build job per round (guide §2.4; the
-    // LlmOps4 CC self-loop discipline). least(l, min-over-nbrs) ==
-    // min-over-closed-nbhd, so labels are value-identical per round.
-    val base = Composite4.coPurchaseEdges(s, dir)
-    val edges = base.unionAll(
-        base.select(col("src")).distinct()
-          .select(col("src"), col("src").as("dst")))
-      .localCheckpoint()
-    // Round 1 specialized: l0 is the identity labelling, so the
-    // neighbourhood-min of labels is just min(dst) — ONE map-side-
-    // combining aggregate replaces that round's two broadcast joins.
-    // (Symmetric edge list ⇒ every node appears as src, so this also
-    // covers the l0 node set.) Value-identical to the oracle's l1.
-    var lbl = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("m"))
-      .select(col("src").as("node"), least(col("src"), col("m")).as("l"))
-      .persist()
-    // Size-gate the loop's hints ONCE on the round-invariant node
-    // count (the count materializes round 1's cache, which round 2
-    // was about to do anyway): under the gate the label table — node-
-    // sized, 150× smaller than the edge list — is hinted so the edges
-    // never shuffle and the only exchange per round is the node-keyed
-    // min; over it the joins run un-hinted and AQE/planner picks the
-    // node-keyed shuffle. A bare broadcast() hint would instead hard-
-    // fail past the 8 GB broadcast cap (graft.util.Hints).
-    val hint = graft.util.Hints.maybeBroadcast(lbl.count())
-    val rounds = scala.collection.mutable.ListBuffer(lbl)
-    for (_ <- 2 to 6) {
-      //
-      // persist (not eager localCheckpoint): each round's broadcast
-      // collect is an action that materializes the PREVIOUS round's
-      // cache, so rounds still execute exactly once, but without the
-      // per-round standalone checkpoint job (6 jobs saved — measured
-      // ~1 s at sf0.1). An IN-LOOP unpersist would drop caches before
-      // anything has executed (no action runs until the end) and
-      // cascade a 2^6 lineage re-expansion — instead the final label
-      // table is eagerly localCheckpoint'd below and every round
-      // cache is dropped there, so a library caller invoking this op
-      // repeatedly accumulates nothing (ADVICE r8).
-      // Self-loops put the node's own label into the aggregate, so
-      // the closed-neighbourhood min IS the next labelling — no
-      // re-attach join (r19).
-      lbl = edges
-        .join(hint(lbl.select(col("node").as("dst"), col("l").as("pl"))),
-          "dst")
-        .groupBy(col("src").as("node"))
-        .agg(min(col("pl")).as("l"))
-        .persist()
-      rounds += lbl
-    }
-    // ONE eager checkpoint materializes the whole 6-round chain (each
-    // round's broadcast collect fills the previous round's cache, so
-    // every round still executes exactly once), after which all six
-    // node-sized round caches are unreachable and dropped — O(1)
-    // retained storage per invocation instead of O(rounds).
-    val finalLbl = lbl.localCheckpoint()
-    rounds.foreach(_.unpersist(false))
-    finalLbl.groupBy(col("l").as("component"))
+  // HashMin is the (min, +) relaxation at w = 0: the closed-
+  // neighbourhood min of labels IS the next labelling.
+  private[graft] def componentLabels(edges: DataFrame, k: Int): DataFrame =
+    GraphRounds.relax(edges.select(col("src"), col("dst"), lit(0L).as("w")),
+      _.select(col("node"), col("node").as("d")), k)
+
+  private def connectedComponents(s: SparkSession, dir: String): DataFrame =
+    componentLabels(Composite4.coPurchaseEdges(s, dir), k = 6)
+      .groupBy(col("d").as("component"))
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy("component")
-  }
 
   // ---- graph_connected_components_conv -----------------------------
   // Convergence-DETECTED components (VERDICT r7 "next tier" item 3):

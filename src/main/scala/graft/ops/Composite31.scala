@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
@@ -48,78 +48,9 @@ object Composite31 {
   // NULL (→ NULL in both engines) and two non-NULLs otherwise —
   // engine-agnostic by construction.
   private def shortestPath(s: SparkSession, dir: String): DataFrame =
-    shortestPathOn(Composite4.coPurchaseEdges(s, dir),
+    GraphRounds.distanceHistogram(
+      Composite4.coPurchaseEdges(s, dir).withColumn("w", lit(1L)),
       n => n % 100 === 0, k = 3)
-
-  /** K Bellman-Ford rounds over a symmetric (src, dst) edge list;
-    * `seed` marks distance-0 nodes. Returns the distance histogram
-    * (unreached = -1). Factored for the planted spec.
-    *
-    * r19 (guide §2.4, the Composite20 self-loop fusion): unreached is
-    * a LARGE SENTINEL distance instead of NULL, and zero-cost
-    * self-loops join the (unit-cost) edge table, so each round's
-    * relaxation min(d(v), min over nbrs d+1) is ONE closed-
-    * neighbourhood min — one join + one map-side-combining aggregate,
-    * no per-round left-join to re-attach unreached nodes. Sentinel
-    * algebra: every node's self-loop contributes exactly d(v), an
-    * unreached neighbour contributes ≥ SENTINEL+1 > SENTINEL, so
-    * unreached stays exactly SENTINEL and reached minima (≤ k, far
-    * below SENTINEL) are untouched — the surfaced histogram is
-    * value-identical to the NULL form (PropertiesSpec's brute-force
-    * law gates it). */
-  private[graft] def shortestPathOn(edges: DataFrame, seed: Column => Column,
-      k: Int): DataFrame = {
-    // Symmetric edge list ⇒ every node appears as src. Self-loops at
-    // weight 0 ride the ONE edge checkpoint (unit edges carry w = 1).
-    val e = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-      .unionAll(edges.select(col("src")).distinct()
-        .select(col("src"), col("src").as("dst"), lit(0L).as("w")))
-      .localCheckpoint()
-    var dist = e.filter(col("w") === 0L)
-      .select(col("src").as("node"),
-        when(seed(col("src")), lit(0L)).otherwise(lit(Unreached)).as("d"))
-      .persist()
-    // The rounds buffer keeps every round's persisted distance table
-    // alive until the final localCheckpoint — correct (each round's
-    // broadcast collect materializes the previous cache) but the
-    // storage footprint is K-PROPORTIONAL (K+1 node-sized tables).
-    // Fine at K = 3; a K >> 3 caller should unpersist round r-2
-    // after round r materializes instead (VERDICT r11 item 4 nit).
-    // Size-gate the loop's hints once on the round-invariant node
-    // count (a cached-block scan). Under the gate the node-sized
-    // distance table broadcasts into the edge scan —
-    // connected_components' plan shape, one node-keyed min exchange
-    // per round; over it the joins run un-hinted and plan node-keyed
-    // shuffles (a bare hint would hard-fail past the 8 GB broadcast
-    // cap instead — graft.util.Hints).
-    val hint = graft.util.Hints.maybeBroadcast(dist.count())
-    val rounds = scala.collection.mutable.ListBuffer(dist)
-    for (_ <- 1 to k) {
-      // persist-not-checkpoint per round for the same reason as
-      // connectedComponents: each round's broadcast collect
-      // materializes the previous cache.
-      dist = e
-        .join(hint(dist.select(col("node").as("dst"), col("d").as("pd"))),
-          "dst")
-        .groupBy(col("src").as("node"))
-        .agg(min(col("pd") + col("w")).as("d"))
-        .persist()
-      rounds += dist
-    }
-    val finalDist = dist.localCheckpoint()
-    rounds.foreach(_.unpersist(false))
-    finalDist.groupBy(
-        when(col("d") >= Unreached, lit(-1L)).otherwise(col("d"))
-          .as("distance"))
-      .agg(count(lit(1)).as("n_nodes"))
-      .orderBy("distance")
-  }
-
-  /** Unreached-distance sentinel: far above any k-round reachable
-    * distance (k·max-weight), far below overflow when a round adds a
-    * weight on top of it. Requires NON-NEGATIVE weights (all callers:
-    * unit hops or co-purchase multiplicities). */
-  private[graft] val Unreached: Long = Long.MaxValue / 4
 
   private def shortestPathOracle: String = {
     val rounds = (1 to 3).map { i =>

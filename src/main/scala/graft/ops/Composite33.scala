@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -145,61 +145,8 @@ object Composite33 {
         .groupBy(col("src"), col("dst"))
         .agg(count(lit(1)).as("w")))
 
-  /** K weighted Bellman-Ford rounds over a (src, dst, w) edge list;
-    * `seed` marks distance-0 nodes. Returns the distance histogram
-    * (unreached = -1). The node universe is src ∪ dst, so asymmetric
-    * (directed) edge lists keep their sink-only nodes in the
-    * histogram; relaxation itself follows edge direction. Factored
-    * for the planted spec and the scalacheck law against brute
-    * k-round relaxation. */
-  private[graft] def shortestPathWeightedOn(edges: DataFrame,
-      seed: Column => Column, k: Int): DataFrame = {
-    // r19: sentinel-distance + zero-weight self-loop fusion (see
-    // Composite31.shortestPathOn — identical algebra, non-negative
-    // weights required and given: co-purchase multiplicities ≥ 1).
-    // One join + one map-side-combining min per round; the per-round
-    // unreached re-attach left-join is gone. The node universe is
-    // src ∪ dst, so directed lists keep their sink-only nodes.
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .unionAll(edges.select(col("src").as("node"))
-        .unionAll(edges.select(col("dst").as("node"))).distinct()
-        .select(col("node").as("src"), col("node").as("dst"),
-          lit(0L).as("w")))
-      .localCheckpoint()
-    // Node universe from the checkpointed table (every node appears
-    // as src once self-loops are in) — NOT from filter(w = 0), which
-    // would double-count nodes if a caller ever passed genuine
-    // zero-weight edges.
-    var dist = e.select(col("src").as("node")).distinct()
-      .select(col("node"),
-        when(seed(col("node")), lit(0L))
-          .otherwise(lit(Composite31.Unreached)).as("d"))
-      .persist()
-    // Hints size-gated once on the round-invariant node count; over
-    // the cap the joins run un-hinted (node-keyed shuffles) instead
-    // of hard-failing at the broadcast limit (graft.util.Hints).
-    val hint = graft.util.Hints.maybeBroadcast(dist.count())
-    val rounds = scala.collection.mutable.ListBuffer(dist)
-    for (_ <- 1 to k) {
-      dist = e
-        .join(hint(dist.select(col("node").as("dst"), col("d").as("pd"))),
-          "dst")
-        .groupBy(col("src").as("node"))
-        .agg(min(col("pd") + col("w")).as("d"))
-        .persist()
-      rounds += dist
-    }
-    val finalDist = dist.localCheckpoint()
-    rounds.foreach(_.unpersist(false))
-    finalDist.groupBy(
-        when(col("d") >= Composite31.Unreached, lit(-1L))
-          .otherwise(col("d")).as("distance"))
-      .agg(count(lit(1)).as("n_nodes"))
-      .orderBy("distance")
-  }
-
   private def shortestPathWeighted(s: SparkSession, dir: String): DataFrame =
-    shortestPathWeightedOn(coPurchaseWeightedEdges(s, dir),
+    GraphRounds.distanceHistogram(coPurchaseWeightedEdges(s, dir),
       n => n % 100 === 0, k = 3)
 
   private def shortestPathWeightedOracle: String = {

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -286,72 +285,6 @@ object Composite4 {
       |FROM per_cust WHERE spend <= 300000
       |ORDER BY tier""".stripMargin
 
-  // ---- graph_pagerank ----------------------------------------------
-  // PageRank (5 iterations, d=0.85) over the part co-purchase graph:
-  // parts are linked when they appear in the same order. The edge
-  // build is a self-join co-partitioned on l_orderkey, materialized
-  // ONCE (localCheckpoint) with its out-degree column attached. The
-  // rank table is |parts|-sized — vocabulary-small next to the edge
-  // table — so each iteration broadcasts it into a map-side-combined
-  // contribution aggregate: NO per-iteration shuffle of the edges,
-  // and the 5 iterations chain lazily into one job. The hint is
-  // size-gated on the node count (graft.util.Hints): past the cap —
-  // or with `broadcastRanks = false` — the same algebra re-plans as
-  // co-partitioned shuffle joins (the llm_dedup_cluster shape), no
-  // other change; Round7Spec asserts both plans. The co-purchase graph
-  // is symmetric, so there are no dangling nodes and rank mass is
-  // conserved (asserted in Round7Spec).
-  //
-  // Float determinism: per-iteration ranks are rounded to 12 dp —
-  // each engine's sum-order drift is ~1e-15 while rank values are
-  // ~1e-3, so both engines round to the same grid point every
-  // iteration and stay in exact lockstep.
-  /** Generic PageRank core over an edge list with columns (src, dst)
-    * — the [[graft.Graft.pageRank]] facade surface. See the scale
-    * notes on the `graph_pagerank` query above. The node set is
-    * src ∪ dst, so sink nodes (dst-only) receive rank; their mass is
-    * NOT redistributed (the standard un-patched dangling behavior —
-    * on a symmetric graph there are no sinks and mass is conserved
-    * exactly). */
-  private[graft] def pageRankOn(edgeList: DataFrame, iterations: Int,
-      damping: Double, broadcastRanks: Boolean = true): DataFrame = {
-    // ONE materialization of the (possibly expensive) upstream edge
-    // build: out-degree rides along via a window over src — the old
-    // groupBy+join shape re-scanned the edge build for the probe side,
-    // and a separate nodes checkpoint over `edgeList` re-ran the whole
-    // build a second time (the r4 bench's 12.5 s was mostly that).
-    val edgesD = edgeList
-      .withColumn("d", count(lit(1)).over(Window.partitionBy("src")))
-      .localCheckpoint()
-    // nodes derive from the checkpointed edges (cheap union+distinct);
-    // the rank formula's |nodes| stays folded into the plan as a
-    // 1-row broadcast (the oracle's nn CTE, same algebra) — the
-    // count() below only feeds the hint gate, never the arithmetic.
-    val nodes = edgesD.select(col("src").as("node"))
-      .union(edgesD.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
-    val nn = broadcast(nodes.agg(count(lit(1)).cast("double").as("n")))
-    // broadcastRanks = true means "hint IF the node count fits the
-    // broadcast gate" — a bare hint would hard-fail past the 8 GB
-    // broadcast cap rather than re-plan (graft.util.Hints). The gate
-    // count is a cached-block scan over the checkpointed node set.
-    val hint: DataFrame => DataFrame =
-      if (broadcastRanks) graft.util.Hints.maybeBroadcast(nodes.count())
-      else identity
-    var ranks = nodes.crossJoin(nn)
-      .select(col("node"), (lit(1.0) / col("n")).as("r"))
-    for (_ <- 1 to iterations) {
-      val contrib = edgesD.join(hint(ranks), col("src") === col("node"))
-        .groupBy(col("dst"))
-        .agg(sum(col("r") / col("d")).as("contrib"))
-      ranks = nodes.crossJoin(nn)
-        .join(hint(contrib), col("node") === col("dst"), "left")
-        .select(col("node"),
-          round(lit(1.0 - damping) / col("n") + lit(damping) * coalesce(col("contrib"), lit(0.0)), 12).as("r"))
-    }
-    ranks.orderBy("node")
-  }
-
   /** Unordered co-purchase pairs (src < dst, each once). Built as ONE
     * orderkey aggregation + a map-side pair explosion rather than a
     * sort-merge self-join: the groupBy shuffles the projected fact
@@ -439,8 +372,16 @@ object Composite4 {
     half.unionAll(half.select(col("dst").as("src"), col("src").as("dst")))
   }
 
+  // ---- graph_pagerank ----------------------------------------------
+  // PageRank (5 iterations, d=0.85) over the part co-purchase graph:
+  // parts are linked when they appear in the same order. The
+  // [[GraphRounds.pageRank]] loop with every node a seed (uniform
+  // teleport). The co-purchase graph is symmetric, so there are no
+  // dangling nodes and rank mass is conserved (asserted in
+  // Round7Spec).
   private def pageRank(s: SparkSession, dir: String): DataFrame =
-    pageRankOn(coPurchaseEdges(s, dir), iterations = 5, damping = 0.85)
+    GraphRounds.pageRank(coPurchaseEdges(s, dir), _ => lit(true),
+      iterations = 5, damping = 0.85)
 
   /** Oracle: the same 5 iterations unrolled as chained CTEs (DuckDB
     * has no iterative DataFrame loop; WITH RECURSIVE cannot re-round

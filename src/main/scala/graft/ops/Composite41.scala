@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,7 +30,7 @@ import graft.util.Tables._
   *    humans fabricating numbers round them — the forensic
   *    complement.
   *
-  * Scale shapes: PPR inherits pageRankOn's shape — ONE edge-build
+  * Scale shapes: PPR is the [[GraphRounds.pageRank]] loop — ONE edge-build
   * materialization with out-degree as a window column, node-sized
   * rank table broadcast into the edge scan, one dst-keyed exchange
   * per iteration; drawdown-duration windows and gap-islands run over
@@ -47,39 +47,8 @@ import graft.util.Tables._
 object Composite41 {
 
   // ---- graph_pagerank_personalized -------------------------------------
-  private[graft] def pprOn(edgeList: DataFrame, seed: Column => Column,
-      iterations: Int, damping: Double): DataFrame = {
-    val edgesD = edgeList
-      .withColumn("d", count(lit(1)).over(Window.partitionBy("src")))
-      .localCheckpoint()
-    val nodes = edgesD.select(col("src").as("node"))
-      .union(edgesD.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
-    val ns = broadcast(nodes.filter(seed(col("node")))
-      .agg(count(lit(1)).cast("double").as("ns")))
-    var ranks = nodes.crossJoin(ns)
-      .select(col("node"),
-        when(seed(col("node")), lit(1.0) / col("ns"))
-          .otherwise(lit(0.0)).as("r"))
-    // Rank/contrib tables are node-sized: hint only under the size
-    // gate (graft.util.Hints) — pageRankOn's discipline.
-    val hint = graft.util.Hints.maybeBroadcast(nodes.count())
-    for (_ <- 1 to iterations) {
-      val contrib = edgesD.join(hint(ranks), col("src") === col("node"))
-        .groupBy(col("dst"))
-        .agg(sum(col("r") / col("d")).as("contrib"))
-      ranks = nodes.crossJoin(ns)
-        .join(hint(contrib), col("node") === col("dst"), "left")
-        .select(col("node"),
-          round(when(seed(col("node")), lit(1.0 - damping) / col("ns"))
-              .otherwise(lit(0.0))
-            + lit(damping) * coalesce(col("contrib"), lit(0.0)), 12).as("r"))
-    }
-    ranks.orderBy("node")
-  }
-
   private def pagerankPersonalized(s: SparkSession, dir: String): DataFrame =
-    pprOn(Composite4.coPurchaseEdges(s, dir).localCheckpoint(),
+    GraphRounds.pageRank(Composite4.coPurchaseEdges(s, dir),
       n => n % 100 === 0, iterations = 5, damping = 0.85)
 
   private val pagerankPersonalizedOracle: String = {

@@ -69,9 +69,7 @@ object Composite65 {
   private[graft] def eigenvectorOn(edgeList: DataFrame,
       iterations: Int = EvIters): DataFrame = {
     val edgesD = edgeList.localCheckpoint()
-    val nodes = edgesD.select(col("src").as("node"))
-      .union(edgesD.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+    val nodes = GraphRounds.nodesOf(edgesD)
     // One size gate per invocation (node count is round-invariant;
     // cached-block scan) reused by every per-round hint AND by the
     // norm-shape choice below.

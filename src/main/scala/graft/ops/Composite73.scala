@@ -62,9 +62,7 @@ object Composite73 {
           deg.select(col("n").as("node"), col("deg").as("w")),
           graft.util.Hints.maybeBroadcast(deg.count()))
       case None =>
-        val n = edges.select(col("src").as("node"))
-          .union(edges.select(col("dst").as("node")))
-          .distinct().localCheckpoint()
+        val n = GraphRounds.nodesOf(edges)
         val hint = graft.util.Hints.maybeBroadcast(n.count())
         // walks_k(v) = Σ_{(u,v) ∈ E} walks_{k−1}(u); w₀ ≡ 1 so w₁ is
         // the in-degree. Sparse by construction (nodes with no

@@ -17,10 +17,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * of a fresh build must be cell-identical — every current builder
   * is exact-integer or fixed-rounding by construction).
   *
-  * The build runs under the memo lock: concurrent first callers
-  * (test suites share one JVM) block rather than racing two writes
-  * to one path. Keys canonicalize the corpus dir, so sf0.01 Verify
-  * and sf0.1 Bench never share a table.
+  * Each key builds once, with no lock held during the build:
+  * concurrent first callers of the SAME table (test suites share one
+  * JVM) wait on the winning caller's future rather than racing two
+  * writes to one path, while DIFFERENT tables build concurrently. A
+  * failed build surfaces its original exception to the builder and to
+  * every waiter, and the next caller retries. Keys canonicalize the
+  * corpus dir, so sf0.01 Verify and sf0.1 Bench never share a table.
   */
 object DiskMemo {
 
@@ -46,7 +49,12 @@ object DiskMemo {
     * parquet paths are overwrite-mode, so no cleanup is needed).
     * Bench uses this to time a TRUE materialized-view build as its
     * own entry (VERDICT r16 item 2) instead of letting the one-time
-    * build hide inside an untimed warm pass. */
+    * build hide inside an untimed warm pass.
+    *
+    * The resets assume SEQUENTIAL use: a reset racing a build of the
+    * same table may let that in-flight build publish after the reset,
+    * and a rebuild overwrites a path a concurrent reader may be
+    * scanning. Call them between queries, never alongside them. */
   private[graft] def reset(): Unit = memo.clear()
 
   /** Forget ONE memoized table (by tag, any corpus dir) so the next
@@ -56,6 +64,12 @@ object DiskMemo {
     * each row would measure the union instead of its own build. */
   private[graft] def reset(tag: String): Unit =
     memo.keySet.removeIf(_.endsWith("#" + tag))
+
+  /** Forget every memoized table whose tag starts with `prefix` — a
+    * view family whose tags carry parameters (e.g. BFS levels). */
+  private[graft] def resetPrefix(prefix: String): Unit =
+    memo.keySet.removeIf(k => k.substring(k.lastIndexOf('#') + 1)
+      .startsWith(prefix))
 
   def table(s: SparkSession, dir: String, tag: String)
       (build: => DataFrame): DataFrame = {
@@ -79,6 +93,12 @@ object DiskMemo {
       }
       fresh
     }
-    s.read.parquet(fut.join())
+    // join() wraps a failed build in a CompletionException; waiters
+    // rethrow the builder's own exception, as the builder does.
+    val path = try fut.join() catch {
+      case e: java.util.concurrent.CompletionException if e.getCause != null =>
+        throw e.getCause
+    }
+    s.read.parquet(path)
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * hop-≤3 BFS over the symmetric co-purchase graph; until round 16
   * each row rebuilt its own levels — together the suite's two
   * heaviest graph rows. This object computes the levels ONCE per
-  * (corpus, seeds, k) and feeds both rows:
+  * (corpus, seeds) and feeds both rows:
   *
   *  - [[levelsOn]] — the pure forward σ-BFS over a caller-supplied
   *    edge list (the planted-graph test seam; no disk, no memo).
@@ -37,23 +37,20 @@ import org.apache.spark.sql.functions._
   *    ids roundtrip parquet exactly, so consumers of the memo and of
   *    a fresh build compute cell-identical results.
   *
-  * The memo key canonicalizes the corpus dir and carries (seeds, k),
-  * so sf0.01 Verify and sf0.1 Bench runs never share levels. Build
-  * is serialized under the memo lock: concurrent first callers (test
-  * suites share one JVM) block rather than racing two writes to one
-  * path.
+  * Each level is its own [[DiskMemo]] view, built from the previous
+  * levels' views as the [[TriCore]] views chain. DiskMemo keys
+  * canonicalize the corpus dir, so sf0.01 Verify and sf0.1 Bench runs
+  * never share levels, and concurrent first callers wait on one build
+  * per level rather than racing two writes to one path. Level d
+  * depends on (seeds, d) only, so calls with different k share their
+  * common levels.
   */
 object GraphBfs {
 
-  private case class Handle(seedsPath: String, levelPaths: IndexedSeq[String])
-
-  private val memo =
-    scala.collection.mutable.HashMap.empty[(String, Int, Int), Handle]
-
-  /** Forget every memoized level set so the next caller rebuilds
-    * (paths are overwrite-mode). Bench uses this to time a TRUE
-    * forward-σ-BFS build as its own entry (VERDICT r16 item 2). */
-  private[graft] def reset(): Unit = memo.synchronized { memo.clear() }
+  /** Forget every memoized level so the next caller rebuilds (paths
+    * are overwrite-mode). Bench uses this to time a TRUE forward-σ-BFS
+    * build as its own entry (VERDICT r16 item 2). */
+  private[graft] def reset(): Unit = DiskMemo.resetPrefix("bfs_")
 
   /** Forward σ-BFS: returns (seedRows(seed, seed_degree),
     * levels(0..k)) where levels(d) = (seed, node, sigma) at depth d.
@@ -96,61 +93,38 @@ object GraphBfs {
   }
 
   /** Disk-memoized corpus levels over [[Composite4.coPurchaseEdges]]:
-    * build + parquet-write once per JVM per (dir, seeds, k), read
-    * back on every later call (see object doc for why disk, not
+    * built and parquet-written once per JVM per (dir, seeds, level),
+    * read back on every later call (see object doc for why disk, not
     * memory).
     *
-    * r19 (guide §1.2 — remove passes): the build WRITES each frontier
-    * straight to its final parquet path and reads it back for the
-    * next round, instead of the r18 shape (localCheckpoint every
-    * level, then re-write all of them — two materializations per
-    * level plus a count-gated broadcast hint, ~10 jobs for k=3; now
-    * one write job per level, ~5). The parquet read-backs carry
-    * accurate file statistics, so the planner broadcasts the
-    * frontier/visited sides on its own and plans keyed shuffles once
-    * they outgrow the threshold — the TriCore r18 stats-over-hand-gate
-    * discipline; the deg.count() gate job is dropped with it.
+    * Each frontier is written straight to its view and read back for
+    * the next round: one write per level, no checkpoint and no count
+    * gate. The parquet read-backs carry accurate file statistics, so
+    * the planner broadcasts the frontier/visited sides on its own and
+    * plans keyed shuffles once they outgrow the threshold — the
+    * TriCore stats-over-hand-gate discipline. The seed table and the
+    * depth-0 level share ONE seeds-wide view (node == seed, σ == 1 at
+    * depth 0 are projections of the seed rows).
     * Level content is IDENTICAL to [[levelsOn]]'s (same plan subtree
-    * per level, exact BIGINT σ; [[GraphBfsSpec]] pins the equality). */
+    * per level, exact BIGINT σ; Round58Spec pins the equality). */
   private[graft] def sharedLevels(s: SparkSession, dir: String, seeds: Int,
       k: Int): (DataFrame, IndexedSeq[DataFrame]) = {
-    val key = (new java.io.File(dir).getCanonicalPath, seeds, k)
-    val h = memo.synchronized {
-      memo.getOrElseUpdate(key, {
-        val base = Scans.tmp(s, dir, s"bfslevels_${seeds}_$k")
-        val edges = Composite4.coPurchaseEdges(s, dir)
-        // Seed table and depth-0 level fused into ONE seeds-wide write
-        // (node == seed, σ == 1 at depth 0 are projections of the seed
-        // rows): one write action instead of two, the Handle reads
-        // project the two shapes back out.
-        TriCore.sharedDeg(s, dir)
-          .orderBy(col("deg").desc, col("n")).limit(seeds)
-          .select(col("n").as("seed"), col("deg").as("seed_degree"),
-            col("n").as("node"), lit(1L).as("sigma"))
-          .write.mode("overwrite").parquet(s"$base/seeds")
-        var levels = List(s.read.parquet(s"$base/seeds")
-          .select(col("seed"), col("node"), col("sigma")))
-        var visited = levels.head.select(col("seed"), col("node"))
-        for (d <- 1 to k) {
-          edges
-            .join(levels.head.select(col("seed"), col("node").as("src"),
-              col("sigma").as("ps")), "src")
-            .groupBy(col("seed"), col("dst").as("node"))
-            .agg(sum(col("ps")).as("sigma"))
-            .join(visited, Seq("seed", "node"), "left_anti")
-            .write.mode("overwrite").parquet(s"$base/level$d")
-          val lv = s.read.parquet(s"$base/level$d")
-          visited = visited.unionAll(lv.select(col("seed"), col("node")))
-          levels = lv :: levels
-        }
-        Handle(s"$base/seeds",
-          s"$base/seeds" +: (1 to k).map(d => s"$base/level$d"))
-      })
+    val seedView = DiskMemo.table(s, dir, s"bfs_s${seeds}_seeds")(
+      TriCore.sharedDeg(s, dir)
+        .orderBy(col("deg").desc, col("n")).limit(seeds)
+        .select(col("n").as("seed"), col("deg").as("seed_degree"),
+          col("n").as("node"), lit(1L).as("sigma")))
+    val levels = (1 to k).foldLeft(IndexedSeq(
+        seedView.select(col("seed"), col("node"), col("sigma")))) { (ls, d) =>
+      ls :+ DiskMemo.table(s, dir, s"bfs_s${seeds}_level$d")(
+        Composite4.coPurchaseEdges(s, dir)
+          .join(ls.last.select(col("seed"), col("node").as("src"),
+            col("sigma").as("ps")), "src")
+          .groupBy(col("seed"), col("dst").as("node"))
+          .agg(sum(col("ps")).as("sigma"))
+          .join(ls.map(_.select(col("seed"), col("node"))).reduce(_ unionAll _),
+            Seq("seed", "node"), "left_anti"))
     }
-    (s.read.parquet(h.seedsPath).select(col("seed"), col("seed_degree")),
-      h.levelPaths.zipWithIndex.map { case (p, d) =>
-        val df = s.read.parquet(p)
-        if (d == 0) df.select(col("seed"), col("node"), col("sigma")) else df
-      })
+    (seedView.select(col("seed"), col("seed_degree")), levels)
   }
 }

@@ -28,6 +28,14 @@ import org.apache.spark.sql.functions.broadcast
   * an already-persisted/checkpointed table (node sets are
   * round-invariant), so the gate costs one cached-block scan, and
   * every per-round hint inside the loop reuses the same verdict.
+  * Those loops are the (min, +) relaxation and the PageRank core in
+  * `graft.ops.GraphRounds` (connected components, both shortest-path
+  * rows, both PageRank rows), eigenvector and Katz centrality, the
+  * planted-graph BFS levels, k-core peeling and the min-label
+  * connected-components fixpoint. The triangle core, the basket-lift
+  * item table, betweenness, MinHash containment stats and the
+  * dedup-cluster tiers gate the same way on their own edge or row
+  * counts.
   */
 object Hints {
 

@@ -14,29 +14,12 @@ import org.apache.spark.sql.functions._
 class HintsSpec extends AnyFunSuite {
   import TestSpark.{sf, spark}
   import spark.implicits._
+  import HintsSpec.withRowCap
 
   // two components: a 4-path and a 2-cycle; symmetric directed list
   private def edges = Seq(
     (1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 4L), (4L, 3L),
     (1L, 4L), (4L, 1L), (10L, 11L), (11L, 10L)).toDF("src", "dst")
-
-  // Both helpers mutate JVM-global state (sys.props / the shared
-  // session's conf); serialize the override windows behind
-  // TestSpark.globalConfLock so the two mutators never interleave
-  // with each other (ADVICE r14). NOTE the lock serializes MUTATORS
-  // only: a suite that reads these globals without taking the lock
-  // is still exposed during an override window, so conf-sensitive
-  // plan assertions elsewhere must take the same lock (ADVICE r15).
-  private def withRowCap[A](cap: String)(body: => A): A =
-    TestSpark.globalConfLock.synchronized {
-      val prev = sys.props.get("graft.broadcast.rowCap")
-      sys.props("graft.broadcast.rowCap") = cap
-      try body
-      finally prev match {
-        case Some(v) => sys.props("graft.broadcast.rowCap") = v
-        case None    => sys.props -= "graft.broadcast.rowCap"
-      }
-    }
 
   /** Run body with AQE's size-based broadcast promotion off, so an
     * un-hinted join shows its honest shuffle shape (Round7Spec's
@@ -88,12 +71,13 @@ class HintsSpec extends AnyFunSuite {
   }
 
   test("BFS loop: over-cap path plans shuffle joins and agrees with the broadcast path") {
-    val want = graft.ops.Composite31
-      .shortestPathOn(edges, n => n === 1L, k = 3).collect()
-      .map(_.toSeq).toSeq
+    val want = graft.ops.GraphRounds
+      .distanceHistogram(edges.withColumn("w", lit(1L)), n => n === 1L, k = 3)
+      .collect().map(_.toSeq).toSeq
     withRowCap("0") {
       withoutAutoBroadcast {
-        val df = graft.ops.Composite31.shortestPathOn(edges, n => n === 1L, k = 3)
+        val df = graft.ops.GraphRounds
+          .distanceHistogram(edges.withColumn("w", lit(1L)), n => n === 1L, k = 3)
         val got = df.collect().map(_.toSeq).toSeq
         val plan = df.queryExecution.executedPlan.toString
         assert(!plan.contains("BroadcastHashJoin"),
@@ -135,4 +119,25 @@ class HintsSpec extends AnyFunSuite {
         s"$q lost its under-cap broadcast plan")
     }
   }
+}
+
+object HintsSpec {
+  // Both override helpers (this one and withoutAutoBroadcast) mutate
+  // JVM-global state (sys.props / the shared session's conf);
+  // serialize the override windows behind TestSpark.globalConfLock so
+  // the mutators never interleave with each other (ADVICE r14). NOTE
+  // the lock serializes MUTATORS only: a suite that reads these
+  // globals without taking the lock is still exposed during an
+  // override window, so conf-sensitive plan assertions elsewhere must
+  // take the same lock (ADVICE r15).
+  def withRowCap[A](cap: String)(body: => A): A =
+    TestSpark.globalConfLock.synchronized {
+      val prev = sys.props.get("graft.broadcast.rowCap")
+      sys.props("graft.broadcast.rowCap") = cap
+      try body
+      finally prev match {
+        case Some(v) => sys.props("graft.broadcast.rowCap") = v
+        case None    => sys.props -= "graft.broadcast.rowCap"
+      }
+    }
 }

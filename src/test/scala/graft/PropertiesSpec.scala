@@ -201,9 +201,9 @@ object PropertiesSpec extends Properties("graft-laws") {
           .map(n => dist.getOrElse(n, -1L))
           .groupBy(identity).view.mapValues(_.size.toLong).toMap
         val edges = half.toDF("src", "dst")
-        val got = graft.ops.Composite31
-          .shortestPathOn(edges.union(edges.select($"dst", $"src")),
-            n => n % 3 === 0, k)
+        val got = graft.ops.GraphRounds
+          .distanceHistogram(edges.union(edges.select($"dst", $"src"))
+            .withColumn("w", lit(1L)), n => n % 3 === 0, k)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         got == expected
       }
@@ -234,11 +234,71 @@ object PropertiesSpec extends Properties("graft-laws") {
         val expected = nodes.toSeq.map(n => dist(n).getOrElse(-1L))
           .groupBy(identity).view.mapValues(_.size.toLong).toMap
         val edges = half.toDF("src", "dst", "w")
-        val got = graft.ops.Composite33.shortestPathWeightedOn(
+        val got = graft.ops.GraphRounds.distanceHistogram(
             edges.union(edges.select($"dst", $"src", $"w")),
             n => n % 3 === 0, k)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         got == expected
+      }
+    }
+
+  property("componentLabels == brute-force fixed-k HashMin") =
+    forAll(Gen.listOf(Gen.zip(Gen.chooseNum(0L, 10L), Gen.chooseNum(0L, 10L))),
+      Gen.chooseNum(1, 4)) { (es, k) =>
+      import spark.implicits._
+      val half = es.filter { case (a, b) => a != b }.distinct
+      half.isEmpty || {
+        val sym = half ++ half.map(_.swap)
+        val nodes = sym.map(_._1).distinct
+        // k synchronous rounds of l(v) <- min(l(v), min over nbrs l(u))
+        var lbl = nodes.map(n => n -> n).toMap
+        for (_ <- 1 to k) {
+          val nbrMin = sym.groupBy(_._1).view
+            .mapValues(_.map { case (_, u) => lbl(u) }.min).toMap
+          lbl = lbl.map { case (n, l) => n -> math.min(l, nbrMin(n)) }
+        }
+        val got = graft.ops.Composite20
+          .componentLabels(sym.toDF("src", "dst"), k)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        got == lbl
+      }
+    }
+
+  property("GraphRounds.pageRank == brute-force 12-dp power iteration") =
+    forAll(Gen.listOf(Gen.zip(Gen.chooseNum(0L, 10L), Gen.chooseNum(0L, 10L)))) { es =>
+      import spark.implicits._
+      val half = es.filter { case (a, b) => a != b }.distinct
+      half.isEmpty || {
+        val sym = half ++ half.map(_.swap)
+        val nodes = sym.map(_._1).distinct
+        val deg = sym.groupBy(_._1).view.mapValues(_.size.toDouble).toMap
+        val (iters, damping) = (3, 0.85)
+        def round12(x: Double) = BigDecimal(x)
+          .setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
+        def brute(isSeed: Long => Boolean): Map[Long, Double] = {
+          val ns = nodes.count(isSeed).toDouble
+          var r = nodes.map(n => n -> (if (isSeed(n)) 1.0 / ns else 0.0)).toMap
+          for (_ <- 1 to iters) {
+            val contrib = sym.groupBy(_._2).view
+              .mapValues(_.map { case (u, _) => r(u) / deg(u) }.sum).toMap
+            r = nodes.map(n => n -> round12(
+              (if (isSeed(n)) (1.0 - damping) / ns else 0.0)
+                + damping * contrib.getOrElse(n, 0.0))).toMap
+          }
+          r
+        }
+        def got(seed: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+          graft.ops.GraphRounds
+            .pageRank(sym.toDF("src", "dst"), seed, iters, damping)
+            .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        // Contribution sums may add in another order than the fold
+        // above, so a rank can land one 12-dp grid step away; a wrong
+        // teleport or degree would miss by orders of magnitude more.
+        def close(a: Map[Long, Double], b: Map[Long, Double]) =
+          a.keySet == b.keySet && a.forall { case (n, x) =>
+            math.abs(x - b(n)) < 1e-11 }
+        close(got(_ => lit(true)), brute(_ => true)) &&
+          close(got(n => n % 3 === 0), brute(_ % 3 == 0))
       }
     }
 

@@ -21,8 +21,8 @@ class Round29Spec extends AnyFunSuite {
     val half = Seq((100L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .toDF("src", "dst")
     val edges = half.union(half.select(col("dst"), col("src")))
-    val got = graft.ops.Composite31
-      .shortestPathOn(edges, n => n % 100 === 0, k = 3)
+    val got = graft.ops.GraphRounds
+      .distanceHistogram(edges.withColumn("w", lit(1L)), n => n % 100 === 0, k = 3)
       .as[(Long, Long)].collect().toSeq
     assert(got == Seq((-1L, 2L), (0L, 1L), (1L, 1L), (2L, 1L), (3L, 1L)))
   }
@@ -30,8 +30,8 @@ class Round29Spec extends AnyFunSuite {
   test("shortestPathOn: no seeds -> every node unreached") {
     val half = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
     val edges = half.union(half.select(col("dst"), col("src")))
-    val got = graft.ops.Composite31
-      .shortestPathOn(edges, _ => lit(false), k = 2)
+    val got = graft.ops.GraphRounds
+      .distanceHistogram(edges.withColumn("w", lit(1L)), _ => lit(false), k = 2)
       .as[(Long, Long)].collect().toSeq
     assert(got == Seq((-1L, 3L)))
   }

@@ -47,8 +47,8 @@ class Round30Spec extends AnyFunSuite {
     val half = Seq((3L, 1L, 10L), (1L, 2L, 1L), (3L, 2L, 100L),
       (7L, 8L, 2L)).toDF("src", "dst", "w")
     val edges = half.union(half.select(col("dst"), col("src"), col("w")))
-    val got = graft.ops.Composite33
-      .shortestPathWeightedOn(edges, n => n % 3 === 0, k = 3)
+    val got = graft.ops.GraphRounds
+      .distanceHistogram(edges, n => n % 3 === 0, k = 3)
       .as[(Long, Long)].collect().toSeq
     assert(got == Seq((-1L, 2L), (0L, 1L), (10L, 1L), (11L, 1L)))
   }
@@ -59,8 +59,8 @@ class Round30Spec extends AnyFunSuite {
     val half = Seq((3L, 1L, 1L), (1L, 2L, 1L), (2L, 4L, 1L))
       .toDF("src", "dst", "w")
     val edges = half.union(half.select(col("dst"), col("src"), col("w")))
-    val got = graft.ops.Composite33
-      .shortestPathWeightedOn(edges, n => n % 3 === 0, k = 2)
+    val got = graft.ops.GraphRounds
+      .distanceHistogram(edges, n => n % 3 === 0, k = 2)
       .as[(Long, Long)].collect().toSeq
     assert(got == Seq((-1L, 1L), (0L, 1L), (1L, 1L), (2L, 1L)))
   }

@@ -19,8 +19,8 @@ class Round38Spec extends AnyFunSuite {
     // 0.5*1.0 = 0.5; the seeds keep teleport 0.25 each. Sum = 1.
     val half = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
     val sym = half.unionAll(half.select($"dst".as("src"), $"src".as("dst")))
-    val got = graft.ops.Composite41
-      .pprOn(sym, n => n % 2 === 0, iterations = 1, damping = 0.5)
+    val got = graft.ops.GraphRounds
+      .pageRank(sym, n => n % 2 === 0, iterations = 1, damping = 0.5)
       .as[(Long, Double)].collect().toSeq
     assert(got == Seq((0L, 0.25), (1L, 0.5), (2L, 0.25)))
   }

@@ -73,21 +73,27 @@ class Round7Spec extends AnyFunSuite {
     // same algebra, co-partitioned shuffle joins. Disable AQE's
     // size-based broadcast promotion so the hint-free plan is the
     // honest shuffle shape.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val edges = graft.ops.Composite4.coPurchaseEdges(spark, sf)
-      val bc = graft.ops.Composite4.pageRankOn(edges, 2, 0.85).collect()
-      val sj = graft.ops.Composite4
-        .pageRankOn(edges, 2, 0.85, broadcastRanks = false)
-      val plan = sj.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"fallback still broadcasts:\n${plan.take(1500)}")
-      val sjRows = sj.collect()
-      assert(sjRows.map(r => (r.get(0), r.getDouble(1))).toSeq ==
-        bc.map(r => (r.get(0), r.getDouble(1))).toSeq,
-        "fallback result diverges from broadcast plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // The size gate's row cap at 0 drops the rank-table hints;
+    // both conf overrides hold TestSpark.globalConfLock.
+    TestSpark.globalConfLock.synchronized {
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val edges = graft.ops.Composite4.coPurchaseEdges(spark, sf)
+        val bc = graft.ops.GraphRounds.pageRank(edges, _ => lit(true), 2, 0.85)
+          .collect()
+        val sj = HintsSpec.withRowCap("0") {
+          graft.ops.GraphRounds.pageRank(edges, _ => lit(true), 2, 0.85)
+        }
+        val plan = sj.queryExecution.executedPlan.toString
+        assert(!plan.contains("BroadcastHashJoin"),
+          s"fallback still broadcasts:\n${plan.take(1500)}")
+        val sjRows = sj.collect()
+        assert(sjRows.map(r => (r.get(0), r.getDouble(1))).toSeq ==
+          bc.map(r => (r.get(0), r.getDouble(1))).toSeq,
+          "fallback result diverges from broadcast plan")
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("obs_metrics: observed metrics equal the declarative aggregate") {
